@@ -8,6 +8,8 @@ mainTesting.py:414-431 — SURVEY.md §4).
 
 from __future__ import annotations
 
+import functools
+import logging
 import os
 
 from pyspark.sql import DataFrame, SparkSession
@@ -89,10 +91,6 @@ def scan_scatter(spark: SparkSession, sf_dir: str, name: str) -> int | None:
     est_splits = max(1, -(-table_size_bytes(sf_dir, name) // max_split))
     par = spark.sparkContext.defaultParallelism
     return max(2, par) if est_splits < par else None
-
-
-def load_all(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {name: load_table(spark, sf_dir, name) for name in TABLES}
 
 
 def table_size_bytes(sf_dir: str, name: str) -> int:
@@ -237,24 +235,6 @@ def _persistent_rdd_ids(spark: SparkSession) -> frozenset:
         return frozenset()
 
 
-def checkpoint_tracked(df: DataFrame) -> tuple[DataFrame, frozenset]:
-    """localCheckpoint ``df`` and return (checkpointed frame, the set of
-    persistent-RDD ids the checkpoint pinned). The ids are what
-    ``unpersist_tracked`` needs to actually FREE the executor blocks on
-    cache eviction — ``DataFrame.unpersist()`` only talks to the cache
-    manager and is a no-op for checkpoint RDDs (ADVICE r11: FIFO
-    eviction was dropping the dict reference and leaving the blocks to
-    JVM GC). Snapshot-diff is sound here because the engine drives
-    queries sequentially from one driver thread; a concurrent builder
-    could attribute a neighbor's RDD, which at worst frees a block the
-    neighbor would lazily recompute-from-checkpoint-error — so keep
-    builds single-threaded (they are: registry + pytest)."""
-    spark = df.sparkSession
-    before = _persistent_rdd_ids(spark)
-    ck = df.localCheckpoint()
-    return ck, _persistent_rdd_ids(spark) - before
-
-
 def stats_reset_checkpoint(df: DataFrame) -> DataFrame:
     """``localCheckpoint`` plus a fresh-stats rebuild, for ITERATIVE loops.
 
@@ -272,7 +252,8 @@ def stats_reset_checkpoint(df: DataFrame) -> DataFrame:
     (zero data movement, same pinned blocks) drops the carried estimate
     back to defaultSizeInBytes, so loop-frame estimates stay bounded per
     round instead of compounding across rounds. Falls back to the plain
-    checkpoint if the (stable-in-practice) internal constructor moves."""
+    checkpoint if the (stable-in-practice) internal constructor moves,
+    and says so once: the fallback brings the compounding back."""
     ck = df.localCheckpoint()
     spark = df.sparkSession
     try:
@@ -281,16 +262,28 @@ def stats_reset_checkpoint(df: DataFrame) -> DataFrame:
         )
         return DataFrame(jdf, spark)
     except Exception:
+        _warn_stats_reset_fallback()
         return ck
+
+
+@functools.cache
+def _warn_stats_reset_fallback() -> None:
+    logging.getLogger(__name__).warning(
+        "stats_reset_checkpoint: cannot rebuild the checkpointed Dataset; "
+        "falling back to a plain localCheckpoint, so size estimates "
+        "compound across loop rounds again"
+    )
 
 
 def unpersist_tracked(spark: SparkSession, rdd_ids) -> None:
     """Free the blocks of the given persistent-RDD ids (best-effort:
-    a gone session or already-unpersisted id is a no-op). Only call on
-    frames evicted from a memo cache — a localCheckpoint CANNOT be
-    recomputed (lineage is truncated), so any still-live plan reading
-    the frame would fail; eviction order (FIFO, oldest corpus first)
-    guarantees the engine's sequential consumers are done with it."""
+    a gone session or already-unpersisted id is a no-op). Only
+    session_memo calls it, on blocks no live artifact reads: an evicted
+    entry's, or a build's whose artifact is its disk read — a
+    localCheckpoint CANNOT be recomputed (lineage is truncated), so any
+    still-live plan reading the frame would fail; eviction order (FIFO,
+    oldest corpus first) guarantees the engine's sequential consumers
+    are done with it."""
     try:
         jmap = spark.sparkContext._jsc.getPersistentRDDs()
         for i in rdd_ids:
@@ -431,49 +424,82 @@ def index_store_publish(spark: SparkSession, tag: str, key: str, df: DataFrame) 
         return None
 
 
-#: FIFO-capped memo store for corpus-level materialized frames — the
-#: persisted-index pattern (a production pipeline builds signatures /
-#: certificates ONCE per corpus snapshot and every consumer reads the
-#: table; the per-query registry shape would otherwise recompute the
-#: shared subtree per query). Keyed by (session app id, sf_dir, corpus
-#: content fingerprint, builder tag, extra policy constants) so a
-#: regenerated corpus, a new session, or a monkeypatched policy can
-#: never hit a stale frame. Values are (frame, pinned rdd ids) so
-#: eviction can release the checkpoint blocks, not just the reference.
+#: THE in-session memo tier, shared by every corpus-level artifact the
+#: engine builds once per snapshot and reuses across queries (signature
+#: tables, LSH pairs, the similarity certificate, IVF centroids, PQ and
+#: residual codebooks, tokenizer state, quality-sweep bars). Keyed by
+#: (session app id, sf_dir, corpus content fingerprint, builder tag,
+#: *policy constants) so a regenerated corpus, a new session, or a
+#: monkeypatched policy can never hit a stale artifact. Values are
+#: (artifact, pinned rdd ids) so FIFO eviction releases the checkpoint
+#: blocks, not just the reference. The cap sits below
+#: _INDEX_KEEP_VERSIONS so a memoized disk read is never vacuumed.
 _MEMO_FRAMES: dict[tuple, tuple] = {}
 _MEMO_FRAMES_MAX = 24
 
-#: plan-audit escape hatch: when False, every memo site (this function
-#: AND the family-specific caches in similarity/unigram) builds the pure
-#: un-checkpointed frame so the plan nets and tools/dump_plans.py audit
-#: the REAL build plan — a checkpoint scan would hide the band self-join
-#: or signature aggregation the audits exist to inspect.
+#: plan-audit escape hatch: when False, every memo site builds the pure
+#: un-checkpointed artifact (session_memo's ``plain``) so the plan nets
+#: and tools/dump_plans.py audit the REAL build plan — a checkpoint scan
+#: would hide the band self-join or signature aggregation the audits
+#: exist to inspect.
 MEMO_ENABLED = True
 
 
-#: pin providers: callables returning the persistent-RDD ids currently
-#: owned by a live cache entry (the family caches in unigram/similarity
-#: register here at import). Any post-publish "free the build window"
-#: unpersist must subtract this union — a builder that nests another
-#: memoized build would otherwise free blocks a LIVE cache entry still
-#: references (ADVICE r12: unigram's cleanup had no protected set).
-_PIN_PROVIDERS: list = []
-
-
-def register_pin_provider(fn) -> None:
-    _PIN_PROVIDERS.append(fn)
-
-
 def protected_rdd_ids() -> set:
-    out: set = set()
-    for _f, ids in _MEMO_FRAMES.values():
-        out |= set(ids)
-    for fn in _PIN_PROVIDERS:
-        try:
-            out |= set(fn())
-        except Exception:
-            pass
-    return out
+    """Persistent-RDD ids owned by live memo entries."""
+    return set().union(*(ids for _v, ids in _MEMO_FRAMES.values()))
+
+
+def session_memo(
+    spark: SparkSession,
+    sf_dir: str,
+    table: str,
+    tag: str,
+    policy: tuple,
+    build,
+    plain=None,
+):
+    """Return the artifact memoized for (session, corpus snapshot of
+    ``table``, ``tag``, ``policy``), running ``build()`` on a miss.
+
+    ``build()`` returns ``(artifact, on_disk)``. The entry owns every RDD
+    the build persisted (a snapshot diff of the JVM's persistent-RDD
+    registry) minus ids a live entry already owns — a builder may nest
+    another memoized build, whose blocks stay with that entry. When
+    ``on_disk`` the artifact reads published index-store files, so those
+    blocks are freed at once; otherwise eviction frees them.
+    ``DataFrame.unpersist()`` could not: it only talks to the cache
+    manager and is a no-op for checkpoint RDDs (ADVICE r11). The diff is
+    sound because builds run sequentially on one driver thread.
+
+    With MEMO_ENABLED False nothing is cached or published: ``plain()``
+    (default: the artifact of ``build()``) is returned."""
+    if not MEMO_ENABLED:
+        return plain() if plain is not None else build()[0]
+    fp = corpus_fingerprint(sf_dir, table)
+    key = (spark.sparkContext.applicationId, sf_dir, fp, tag, *policy)
+    hit = _MEMO_FRAMES.get(key)
+    if hit is None:
+        before = _persistent_rdd_ids(spark)
+        artifact, on_disk = build()
+        ids = (_persistent_rdd_ids(spark) - before) - protected_rdd_ids()
+        if on_disk:
+            unpersist_tracked(spark, ids)
+            ids = frozenset()
+        while len(_MEMO_FRAMES) >= _MEMO_FRAMES_MAX:
+            _old, old_ids = _MEMO_FRAMES.pop(next(iter(_MEMO_FRAMES)))
+            unpersist_tracked(spark, old_ids)
+        hit = _MEMO_FRAMES[key] = (artifact, ids)
+    return hit[0]
+
+
+def _source_file(fn) -> str | None:
+    import inspect
+
+    try:
+        return inspect.getsourcefile(fn)
+    except TypeError:
+        return None
 
 
 def memo_checkpoint(
@@ -487,58 +513,26 @@ def memo_checkpoint(
     """Materialize ``build()`` once per (corpus snapshot, tag, policy)
     and reuse it across queries AND sessions. Three tiers:
 
-    1. in-session memo (dict hit, zero cost);
+    1. the session memo (dict hit, zero cost);
     2. the persisted index store — a SnapshotTable version tagged with
        the full content key (corpus fingerprint + policy + engine code
        fingerprint), so a FRESH SESSION reads the artifact from disk
        instead of rebuilding it (VERDICT r11 item 1: this is the real
        persisted-index-table pattern, not a session-RAM stand-in);
     3. build + publish (one pass: the parquet write IS the
-       materialization; the disk read replaces the localCheckpoint).
+       materialization; the disk read replaces the localCheckpoint,
+       which remains the fallback when the publish fails)."""
 
-    FIFO-capped so long test sessions over many tmp corpora don't pin
-    unbounded executor memory; eviction unpersists any checkpoint blocks
-    tracked at build time (disk-backed hits pin none)."""
-    if not MEMO_ENABLED:
-        return build()
-    fp = corpus_fingerprint(sf_dir, table)
-    key = (spark.sparkContext.applicationId, sf_dir, fp, tag, *extra_key)
-    hit = _MEMO_FRAMES.get(key)
-    if hit is None:
-        import inspect
-
-        try:
-            mod_file = inspect.getsourcefile(build)
-        except TypeError:
-            mod_file = None
-        skey = _index_key(sf_dir, table, tag, extra_key, mod_file)
+    def tiers():
+        skey = _index_key(sf_dir, table, tag, extra_key, _source_file(build))
         df = index_store_lookup(spark, tag, skey)
-        if df is None:
-            ids_before = _persistent_rdd_ids(spark)
-            built = build()
-            df = index_store_publish(spark, tag, skey, built)
-            if df is not None:
-                # the disk read replaces every frame the build pinned —
-                # free the build's internal checkpoints NOW instead of at
-                # session end, EXCEPT ids owned by a live cache entry in
-                # ANY family cache (a builder may nest another memoized
-                # build whose miss cached a checkpoint inside this window;
-                # freeing that would leave a live entry with dead blocks)
-                unpersist_tracked(
-                    spark,
-                    (_persistent_rdd_ids(spark) - ids_before)
-                    - protected_rdd_ids(),
-                )
-                hit = (df, frozenset())
-            else:
-                hit = checkpoint_tracked(built)
-        else:
-            hit = (df, frozenset())
-        while len(_MEMO_FRAMES) >= _MEMO_FRAMES_MAX:
-            _old_df, old_ids = _MEMO_FRAMES.pop(next(iter(_MEMO_FRAMES)))
-            unpersist_tracked(spark, old_ids)
-        _MEMO_FRAMES[key] = hit
-    return hit[0]
+        if df is not None:
+            return df, True
+        built = build()
+        df = index_store_publish(spark, tag, skey, built)
+        return (df, True) if df is not None else (built.localCheckpoint(), False)
+
+    return session_memo(spark, sf_dir, table, tag, extra_key, tiers, build)
 
 
 # ----------------------------------------- incremental store maintenance
@@ -713,18 +707,9 @@ def memo_checkpoint_rowwise(
     ``build_full()`` builds over the whole corpus (the fallback);
     ``build_batch(docs)`` builds the same rows over an arbitrary
     (sub)frame of the table — both must emit identical schemas."""
-    if not MEMO_ENABLED:
-        return build_full()
-    fp = corpus_fingerprint(sf_dir, table)
-    key = (spark.sparkContext.applicationId, sf_dir, fp, tag, *extra_key)
-    hit = _MEMO_FRAMES.get(key)
-    if hit is None:
-        import inspect
 
-        try:
-            mod_file = inspect.getsourcefile(build_batch)
-        except TypeError:
-            mod_file = None
+    def tiers():
+        mod_file = _source_file(build_batch)
         skey = _index_key(sf_dir, table, tag, extra_key, mod_file)
         policy_fp = _policy_fingerprint(tag, extra_key, mod_file)
         df = index_store_lookup(spark, tag, skey)
@@ -732,35 +717,22 @@ def memo_checkpoint_rowwise(
             df = _try_incremental_publish(
                 spark, sf_dir, table, tag, skey, policy_fp, build_batch
             )
+        if df is not None:
+            return df, True
+        built = build_full()
+        df = index_store_publish(spark, tag, skey, built)
         if df is None:
-            ids_before = _persistent_rdd_ids(spark)
-            built = build_full()
-            df = index_store_publish(spark, tag, skey, built)
-            if df is not None:
-                _lineage_write(
-                    tag,
-                    skey,
-                    {
-                        "skey": skey,
-                        "parent_skey": None,
-                        "policy_fp": policy_fp,
-                        "file_stats": [
-                            list(t) for t in corpus_file_stats(sf_dir, table)
-                        ],
-                    },
-                )
-                unpersist_tracked(
-                    spark,
-                    (_persistent_rdd_ids(spark) - ids_before)
-                    - protected_rdd_ids(),
-                )
-                hit = (df, frozenset())
-            else:
-                hit = checkpoint_tracked(built)
-        else:
-            hit = (df, frozenset())
-        while len(_MEMO_FRAMES) >= _MEMO_FRAMES_MAX:
-            _old_df, old_ids = _MEMO_FRAMES.pop(next(iter(_MEMO_FRAMES)))
-            unpersist_tracked(spark, old_ids)
-        _MEMO_FRAMES[key] = hit
-    return hit[0]
+            return built.localCheckpoint(), False
+        _lineage_write(
+            tag,
+            skey,
+            {
+                "skey": skey,
+                "parent_skey": None,
+                "policy_fp": policy_fp,
+                "file_stats": [list(t) for t in corpus_file_stats(sf_dir, table)],
+            },
+        )
+        return df, True
+
+    return session_memo(spark, sf_dir, table, tag, extra_key, tiers, build_full)

@@ -6,7 +6,6 @@ higher-order array function, not a UDF.
 
 from __future__ import annotations
 
-import pandas as pd
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -405,17 +404,11 @@ FROM canon
     ),
 )
 def text_canonicalize(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import unicodedata
-
-    from pyspark.sql.functions import pandas_udf
-
-    @pandas_udf("string")
-    def nfc(s: pd.Series) -> pd.Series:
-        return s.map(lambda t: None if t is None else unicodedata.normalize("NFC", t))
+    from .pipelines import _nfc_udf
 
     docs = load_table(spark, sf_dir, "documents")
     ctext = F.trim(
-        F.regexp_replace(nfc(F.lower(F.col("text"))), r"\s+", " ")
+        F.regexp_replace(_nfc_udf()(F.lower(F.col("text"))), r"\s+", " ")
     )
     return docs.select(
         "doc_id",

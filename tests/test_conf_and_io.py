@@ -60,6 +60,41 @@ def test_table_metadata_recurses_partitioned_layout(spark, tmp_path):
     assert table_size_bytes(str(tmp_path), "documents") > 0
 
 
+def _size_estimate(df) -> int:
+    return int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
+
+
+def test_stats_reset_checkpoint_resets_size_estimate(spark):
+    """The rebuilt plan's sizeInBytes is the session default, not the
+    input plan's estimate that a plain localCheckpoint carries over (and
+    that compounds across loop rounds)."""
+    import etl_financial_report_spark.io as IO
+
+    df = spark.range(300)
+    pairs = df.crossJoin(df.withColumnRenamed("id", "id2"))
+    carried = _size_estimate(pairs)
+    assert _size_estimate(pairs.localCheckpoint()) == carried
+    reset = IO.stats_reset_checkpoint(pairs)
+    default = spark._jsparkSession.sessionState().conf().defaultSizeInBytes()
+    assert _size_estimate(reset) == default != carried
+    assert reset.count() == 300 * 300
+
+
+def test_stats_reset_checkpoint_fallback_warns_once(spark, monkeypatch, caplog):
+    import etl_financial_report_spark.io as IO
+
+    def moved(*a, **k):
+        raise TypeError("constructor moved")
+
+    monkeypatch.setattr(IO, "DataFrame", moved)
+    IO._warn_stats_reset_fallback.cache_clear()
+    df = spark.range(10)
+    with caplog.at_level("WARNING", logger=IO.__name__):
+        outs = [IO.stats_reset_checkpoint(df) for _ in range(2)]
+    assert [r.levelname for r in caplog.records] == ["WARNING"]
+    assert all(o.count() == 10 for o in outs)
+
+
 def test_index_store_report_tool_runs(spark, tmp_path, monkeypatch):
     """tools/index_store_report.py: pure-metadata report over the store
     layout — runs without a Spark session, prints one line per family

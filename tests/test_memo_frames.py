@@ -1,16 +1,23 @@
 """Cross-query memo checkpoints (r11): the persisted-index pattern's
 correctness contract — a memoized frame must be (a) result-identical to
 the pure build, (b) reused within a (session, corpus snapshot) key,
-(c) invalidated when the corpus file changes, and (d) bypassed entirely
-when io.MEMO_ENABLED is False (the plan-audit escape hatch)."""
+(c) invalidated when the corpus file changes, (d) bypassed entirely
+when io.MEMO_ENABLED is False (the plan-audit escape hatch), and (e) for
+every memo user, freed on eviction: the blocks its entry owns leave the
+JVM's persistent-RDD registry."""
 
 import os
 import shutil
 
+import pytest
 from pyspark.sql import functions as F
 
 import etl_financial_report_spark.io as IO
 from etl_financial_report_spark.io import load_table
+from etl_financial_report_spark.operators import dedup as D
+from etl_financial_report_spark.operators import quality as Q
+from etl_financial_report_spark.operators import similarity as S
+from etl_financial_report_spark.operators import unigram as U
 
 SF = "/root/testdata/sf0.001"
 
@@ -100,45 +107,61 @@ def test_memo_eviction_unpersists_checkpoint_blocks(spark, tmp_path):
     """ADVICE r11: FIFO eviction must FREE the evicted frame's
     checkpoint blocks (rdd unpersist), not just drop the dict
     reference — verified against the JVM's persistent-RDD registry."""
-    from etl_financial_report_spark.io import (
-        _persistent_rdd_ids,
-        checkpoint_tracked,
-        unpersist_tracked,
-    )
+    from etl_financial_report_spark.io import _persistent_rdd_ids, unpersist_tracked
 
     df = load_table(spark, SF, "documents").where(F.col("doc_id") < 5)
-    ck, ids = checkpoint_tracked(df)
+    before = _persistent_rdd_ids(spark)
+    ck = df.localCheckpoint()
+    ids = _persistent_rdd_ids(spark) - before
     assert ids, "localCheckpoint should pin at least one RDD"
-    assert ids <= _persistent_rdd_ids(spark)
     assert ck.count() == 5
     unpersist_tracked(spark, ids)
     assert not (ids & _persistent_rdd_ids(spark))
 
 
-def test_memo_frames_cap_evicts_and_frees(spark, tmp_path):
-    """Filling the memo past its FIFO cap unpersists the oldest entry's
-    blocks end-to-end through memo_checkpoint itself (store disabled so
-    the localCheckpoint path — the one that pins blocks — is the one
-    under test; disk-backed hits pin nothing by construction)."""
-    base = load_table(spark, SF, "documents").where(F.col("doc_id") < 3)
+#: every session-memo user: (the tag of the entry it builds, the call).
+#: LSH pairs nest the signature entry, the residual index nests the IVF
+#: centroids and the QC sweep sits on the memoized scored margins.
+MEMO_USERS = {
+    "memo_checkpoint": ("minhash_lsh_pairs", D.dedup_minhash_lsh_pairs),
+    "memo_checkpoint_rowwise": ("minhash_signature", D._minhash_signature),
+    "ivf_cents": ("ivf_cents", S._ivf_cents),
+    "pq_train": ("pq_train", S._pq_train),
+    "residual_index": ("residual_index", S._residual_index),
+    "unigram_trained": ("unigram_trained", U.unigram_corpus_trained),
+    "qc_bars": ("qc_bars", Q.text_quality_threshold_sweep),
+}
+
+
+@pytest.mark.parametrize("user", list(MEMO_USERS))
+def test_memo_frames_cap_evicts_and_frees(spark, user):
+    """Every memo user's entry owns the blocks its build pinned — none
+    that a nested entry owns — and FIFO eviction past the cap frees
+    them (store disabled so the localCheckpoint path, the one that pins
+    blocks, is the one under test; disk-backed entries pin nothing)."""
+    tag, call = MEMO_USERS[user]
+    filler = load_table(spark, SF, "documents").where(F.col("doc_id") < 3)
     old_max = IO._MEMO_FRAMES_MAX
     old_store = IO.INDEX_STORE_ENABLED
     IO.INDEX_STORE_ENABLED = False
     saved = dict(IO._MEMO_FRAMES)
     IO._MEMO_FRAMES.clear()
-    IO._MEMO_FRAMES_MAX = 2
+    IO._MEMO_FRAMES_MAX = 6  # keeps every nested entry resident
     try:
-        src = str(tmp_path)
-        base.coalesce(1).write.parquet(f"{src}/documents.parquet")
-        first = IO.memo_checkpoint(
-            spark, src, "documents", "t0", lambda: base.select("doc_id")
-        )
-        first_ids = next(iter(IO._MEMO_FRAMES.values()))[1]
-        assert first_ids & IO._persistent_rdd_ids(spark)
-        IO.memo_checkpoint(spark, src, "documents", "t1", lambda: base.select("doc_id"))
-        IO.memo_checkpoint(spark, src, "documents", "t2", lambda: base.select("doc_id"))
-        # t0 evicted: its checkpoint blocks are gone from the registry
-        assert not (first_ids & IO._persistent_rdd_ids(spark))
+        call(spark, SF)
+        [key] = [k for k in IO._MEMO_FRAMES if k[3] == tag]
+        ids = IO._MEMO_FRAMES[key][1]
+        assert ids and ids <= IO._persistent_rdd_ids(spark)
+        owned = [v[1] for v in IO._MEMO_FRAMES.values()]
+        assert sum(map(len, owned)) == len(frozenset().union(*owned))
+        for n in range(IO._MEMO_FRAMES_MAX):
+            if key not in IO._MEMO_FRAMES:
+                break
+            IO.memo_checkpoint(
+                spark, SF, "documents", f"filler{n}", lambda: filler.select("doc_id")
+            )
+        assert key not in IO._MEMO_FRAMES
+        assert not (ids & IO._persistent_rdd_ids(spark))
     finally:
         IO._MEMO_FRAMES_MAX = old_max
         IO.INDEX_STORE_ENABLED = old_store

@@ -211,6 +211,23 @@ def test_no_unguarded_cartesian_cross_joins():
         )
 
 
+def test_block_pinning_stays_inside_io():
+    """Corpus-level artifacts are memoized by io.session_memo alone: it
+    owns the pinned-block bookkeeping, the one FIFO cap and eviction
+    with unpersist. A module that tracks or frees persisted RDDs itself
+    is a hand-rolled cache, the kind that leaked blocks before."""
+    pat = re.compile(
+        r"\b(_persistent_rdd_ids|checkpoint_tracked|unpersist_tracked"
+        r"|register_pin_provider)\b"
+    )
+    for rel, src in _sources():
+        if rel != "io.py":
+            assert not pat.search(src), (
+                f"{rel} manages pinned RDDs itself — memoize through "
+                "io.session_memo instead"
+            )
+
+
 def test_registry_oracle_coverage():
     """CORRECTNESS_r06's third red row: the driver records `err:
     no_oracle` for any queries() entry missing an oracle_sql() entry —

@@ -147,3 +147,21 @@ def test_mrl_funnel_dominates_raw_prefix_ranking(spark):
         for r in q["sim_mrl_prefix_recall"].fn(spark, "/root/testdata/sf0.01").collect()
     }
     assert f.recall_ppm > p[MRL_FUNNEL_DIM].recall_ppm
+
+
+def test_centroid_on_empty_embeddings_is_empty_with_declared_schema(spark, tmp_path):
+    """A zero modal dimension (no vector passes the gate) gives an empty
+    frame with the schema of a normal run, never an array<void> plan."""
+    from etl_financial_report_spark.io import load_table
+    from etl_financial_report_spark.operators.similarity import agg_embedding_centroid
+
+    root = str(tmp_path)
+    load_table(spark, SF, "embeddings").limit(0).write.parquet(
+        f"{root}/embeddings.parquet"
+    )
+    out = agg_embedding_centroid(spark, root)
+    assert out.collect() == []
+    want = agg_embedding_centroid(spark, SF).dtypes
+    assert out.dtypes == want == [
+        ("label", "int"), ("n_vectors", "bigint"), ("centroid_sums", "string")
+    ]
